@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pulsarfeatureextractor_spark.functions.featureset import fused_features_arrow
 from pulsarfeatureextractor_spark.functions.moments import with_lyon_features
 from pulsarfeatureextractor_spark.functions.text import (
     STOPWORDS,
@@ -27,7 +28,7 @@ from pulsarfeatureextractor_spark.functions.text import (
     with_quality_metrics,
     with_token_counts,
 )
-from pulsarfeatureextractor_spark.operators.asof import asof_join
+from pulsarfeatureextractor_spark.operators.asof import asof_join, asof_self_join
 from pulsarfeatureextractor_spark.functions.scores import (
     with_profile_stats_sql,
     with_thornton_scores,
@@ -78,19 +79,16 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same timestamps, so the WHOLE composition (tokenize -> features ->
     # as-of) is differentially checked end-to-end
     seqs = with_event_time(documents_to_sequences(docs), mode="portable")
-    feats = with_lyon_features(seqs)
+    # one Python crossing; the token arrays stay on the JVM side
+    feats = fused_features_arrow(seqs, include_scores=False, drop=("tokens",))
 
     # feature snapshots: the same features observed n_tok seconds
-    # earlier (deterministic synthetic observation history)
-    snaps = feats.select(
-        "doc_id",
-        (F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double"))).alias("obs_time"),
-        F.col("mean").alias("f_mean_obs"),
-        F.col("stdev").alias("f_std_obs"),
-    )
-    joined = asof_join(
-        feats, snaps, on="event_time", right_on="obs_time", by="doc_id",
-        value_cols=["f_mean_obs", "f_std_obs"], strategy="window",
+    # earlier (deterministic synthetic observation history), joined from
+    # the same read of feats
+    joined = asof_self_join(
+        feats, on="event_time", by="doc_id",
+        right_on=F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double")),
+        values={"f_mean_obs": F.col("mean"), "f_std_obs": F.col("stdev")},
     )
     return joined.select(
         "doc_id", "source", "event_time", "n_tok",

@@ -9,10 +9,19 @@ The engine's deployment surface (BASELINE.json north_star):
         --asof 2024-01-20T00:00:00 --gap-seconds 1800 --scores
 
 Pipeline (SURVEY.md §3.2): snapshot scan (with manifest file pruning)
--> time filter -> derive event_time -> Lyon moments (+ optional
-Thornton scores) -> as-of join of prior feature observations ->
+-> time filter -> derive event_time -> the chosen feature families
+(``functions.featureset.plan_features``: JVM families first, then Lyon
+moments and any other Arrow kernel in ONE Python crossing that drops
+the token arrays) -> self as-of join of prior feature observations
+(``operators.asof.asof_self_join``: both sides from one read) ->
 lag/session features -> resumable partitioned write carrying lineage
 (snapshot id, partition spec, input manifest) + metrics.
+
+With the default ``--batch-size 0`` the whole job is one scan, one
+Python crossing, one shuffle and one Spark SQL execution: the write
+itself observes which partitions it committed.  ``--batch-size k``
+first collects the partition keys (a second execution) to commit k
+partitions per Spark job.
 
 Run it on a cluster by dropping --master local overrides; everything
 below is master-agnostic.  Resumability: re-running after a kill
@@ -32,8 +41,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def build_pipeline(spark, args):
     from pyspark.sql import functions as F
 
-    from pulsarfeatureextractor_spark.functions.featureset import extract_features
-    from pulsarfeatureextractor_spark.operators.asof import asof_join
+    from pulsarfeatureextractor_spark.functions.featureset import (
+        feature_families,
+        plan_features,
+    )
+    from pulsarfeatureextractor_spark.operators.asof import asof_self_join
     from pulsarfeatureextractor_spark.operators.sessionize import sessionize
     from pulsarfeatureextractor_spark.operators.windows import lagged
     from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
@@ -49,30 +61,25 @@ def build_pipeline(spark, args):
         seqs = seqs.where(F.col("event_time") <= F.lit(args.asof).cast("timestamp"))
 
     # Lyon moments are always computed (the as-of snapshots carry them);
-    # every other family layers on top VIA THE LIBRARY SELECTOR so the
-    # job's output schema for a set name is identical to
-    # functions.featureset.extract_features's (mirrors the reference
-    # CLI's numbered feature-type switch).
+    # every other family comes from the library's set definitions, so the
+    # job's columns for a set name are those of
+    # functions.featureset.extract_features (mirrors the reference CLI's
+    # numbered feature-type switch).  One plan: JVM families, then every
+    # Arrow kernel in one Python crossing that drops the token arrays.
     feature_set = args.feature_set or ("all" if args.scores else "lyon")
-    if feature_set == "all":
-        feats = extract_features(seqs, "all")
-    else:
-        feats = extract_features(seqs, "lyon")
-        if feature_set != "lyon":
-            feats = extract_features(feats, feature_set)
+    families = feature_families(feature_set)
+    if "lyon" not in families:
+        families = ("lyon", *families)
+    feats = plan_features(seqs, families, drop=("tokens",))
 
     # prior observations of the same features (obs_time strictly before
-    # event_time by construction) as-of joined back — W1 lag features
-    snaps = feats.select(
-        "doc_id",
-        (F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double"))
-         ).alias("obs_time"),
-        F.col("mean").alias("f_mean_obs"),
-        F.col("stdev").alias("f_std_obs"),
-    )
-    joined = asof_join(
-        feats, snaps, on="event_time", right_on="obs_time", by="doc_id",
-        value_cols=["f_mean_obs", "f_std_obs"], strategy="window",
+    # event_time by construction) as-of joined back — W1 lag features.
+    # The snapshot side is a projection of feats, so the self-join reads
+    # each feature row once for both sides.
+    joined = asof_self_join(
+        feats, on="event_time", by="doc_id",
+        right_on=F.col("event_time") - F.make_interval(secs=F.col("n_tok").cast("double")),
+        values={"f_mean_obs": F.col("mean"), "f_std_obs": F.col("stdev")},
     )
     enriched = lagged(joined, "doc_id", "event_time", ["mean"], offsets=(1,))
     enriched = sessionize(enriched, "doc_id", "event_time", args.gap_seconds)
@@ -82,7 +89,7 @@ def build_pipeline(spark, args):
         "input_manifest": [f["path"] for f in manifest["files"]],
         "asof": args.asof,
     }
-    return enriched.drop("tokens"), lineage
+    return enriched, lineage
 
 
 def main(argv=None) -> dict:

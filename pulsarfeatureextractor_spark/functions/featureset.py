@@ -31,12 +31,39 @@ patterns).  Sets:
 
 Each set appends flat, prunable double columns; ``tokens`` is never
 mutated (input_hint invariant).
+
+Planning (``plan_features``): a set is a list of FAMILIES, and each
+family is an optional JVM step (SQL expressions over the token array)
+followed by an optional Arrow kernel.  All JVM steps run first, then
+EVERY Arrow kernel of the request runs in one ``mapInArrow`` (one
+Python crossing per plan, however many kernel families), which may
+drop the token array at the boundary; a final projection restores the
+documented column order.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pulsarfeatureextractor_spark.functions._arrow import map_arrow_kernels
+from pulsarfeatureextractor_spark.functions.moments import (
+    LYON_FIELDS,
+    moments_list_array,
+)
+from pulsarfeatureextractor_spark.functions.scores import (
+    SCORE_FIELDS,
+    SUBBAND_FIELDS,
+    scores_list_array,
+    subband_scores_list_array,
+    with_peace_features,
+    with_profile_stats_sql,
+    with_spinn_features,
+    with_width_features,
+)
+from pulsarfeatureextractor_spark.sources.tokenized import with_synthetic_subbands
 
 FEATURE_SETS = (
     "lyon", "thornton", "stats", "widths", "peace", "spinn", "subband",
@@ -44,64 +71,85 @@ FEATURE_SETS = (
 )
 
 
+def _with_raw_bins(df: DataFrame, tokens_col: str) -> DataFrame:
+    return df.withColumn(
+        "raw_bins", F.transform(F.col(tokens_col), lambda v: v.cast("double"))
+    )
+
+
+# family -> (JVM step(df, tokens_col) or None,
+#            Arrow kernel (input column or None for tokens, names, fn) or None)
+_FAMILIES = {
+    "lyon": (None, (None, LYON_FIELDS, moments_list_array)),
+    "thornton": (None, (None, SCORE_FIELDS, scores_list_array)),
+    "stats": (with_profile_stats_sql, None),
+    "widths": (with_width_features, None),
+    "peace": (with_peace_features, None),
+    "spinn": (with_spinn_features, None),
+    "raw": (_with_raw_bins, None),
+    "subband": (with_synthetic_subbands,
+                ("sb_flat", SUBBAND_FIELDS, partial(subband_scores_list_array, n_chan=8))),
+}
+# next to the stats family (which owns the plain names), the Thornton
+# kernel's copies of its two columns carry a suffix
+_STATS_TWINS = {"sn_ratio": "sn_ratio_t", "peak_offset": "peak_offset_t"}
+
+
+def feature_families(feature_set: str) -> "tuple[str, ...]":
+    """The families a named feature set is made of."""
+    if feature_set not in FEATURE_SETS:
+        raise ValueError(
+            f"unknown feature set {feature_set!r}; one of {FEATURE_SETS}"
+        )
+    if feature_set == "all":
+        return ("lyon", "thornton", "widths", "stats")
+    return (feature_set,)
+
+
+def plan_features(
+    df: DataFrame,
+    families: "tuple[str, ...] | list[str]",
+    tokens_col: str = "tokens",
+    drop: "tuple[str, ...] | list[str]" = (),
+) -> DataFrame:
+    """Append the columns of ``families`` (see the module docstring) in
+    ONE plan: the JVM steps, then one ``mapInArrow`` holding every Arrow
+    kernel, then a projection to ``df``'s columns (minus ``drop``)
+    followed by each family's columns in family order.
+
+    ``drop`` removes columns (typically ``("tokens",)``) from the output
+    batches at the Python boundary, so the return crossing ships only
+    the kept and feature columns instead of echoing the token buffers
+    back to the JVM.  Spark cannot prune columns through an opaque
+    ``mapInArrow``; dropping them here is the only way to keep them out
+    of everything downstream.
+    """
+    out = df
+    dropset = set(drop)
+    cols = [c for c in df.columns if c not in dropset]
+    kernels = []
+    for family in families:
+        jvm_step, kernel = _FAMILIES[family]
+        if jvm_step is not None:
+            before = set(out.columns)
+            out = jvm_step(out, tokens_col)
+            cols += [c for c in out.columns if c not in before]
+        if kernel is not None:
+            src, names, fn = kernel
+            if family == "thornton" and "stats" in families:
+                names = [_STATS_TWINS.get(n, n) for n in names]
+            kernels.append((src or tokens_col, names, fn))
+            cols += names
+    if kernels:
+        out = map_arrow_kernels(out, kernels, drop)
+    return out.select(*cols)
+
+
 def extract_features(
     df: DataFrame, feature_set: str = "lyon", tokens_col: str = "tokens"
 ) -> DataFrame:
     """Append the chosen feature set's columns (see module docstring)."""
-    from pulsarfeatureextractor_spark.functions.moments import with_lyon_features
-    from pulsarfeatureextractor_spark.functions.scores import (
-        with_profile_stats_sql,
-        with_thornton_scores,
-    )
-
-    if feature_set == "lyon":
-        return with_lyon_features(df, tokens_col)
-    if feature_set == "thornton":
-        return with_thornton_scores(df, tokens_col)
-    if feature_set == "stats":
-        return with_profile_stats_sql(df, tokens_col)
-    if feature_set == "widths":
-        from pulsarfeatureextractor_spark.functions.scores import with_width_features
-
-        return with_width_features(df, tokens_col)
-    if feature_set == "peace":
-        from pulsarfeatureextractor_spark.functions.scores import with_peace_features
-
-        return with_peace_features(df, tokens_col)
-    if feature_set == "spinn":
-        from pulsarfeatureextractor_spark.functions.scores import with_spinn_features
-
-        return with_spinn_features(df, tokens_col)
-    if feature_set == "subband":
-        from pulsarfeatureextractor_spark.functions.scores import (
-            with_subband_scores,
-        )
-        from pulsarfeatureextractor_spark.sources.tokenized import (
-            with_synthetic_subbands,
-        )
-
-        return with_subband_scores(
-            with_synthetic_subbands(df, tokens_col), "sb_flat"
-        )
-    if feature_set == "raw":
-        return df.withColumn(
-            "raw_bins",
-            F.transform(F.col(tokens_col), lambda v: v.cast("double")),
-        )
-    if feature_set == "all":
-        from pulsarfeatureextractor_spark.functions.scores import with_width_features
-
-        out = with_lyon_features(df, tokens_col)
-        out = with_thornton_scores(out, tokens_col)
-        out = with_width_features(out, tokens_col)
-        # stats columns duplicate two thornton columns; suffix them
-        out = with_profile_stats_sql(
-            out.withColumnRenamed("sn_ratio", "sn_ratio_t")
-            .withColumnRenamed("peak_offset", "peak_offset_t"),
-            tokens_col,
-        )
-        return out
-    raise ValueError(f"unknown feature set {feature_set!r}; one of {FEATURE_SETS}")
+    return plan_features(df, feature_families(feature_set), tokens_col)
 
 
 def fused_features_arrow(
@@ -110,60 +158,21 @@ def fused_features_arrow(
     include_scores: bool = True,
     drop: "tuple[str, ...] | list[str]" = (),
 ) -> DataFrame:
-    """Lyon moments (+ Thornton scores) in ONE ``mapInArrow`` pass —
-    the production hot path for the full per-candidate workload.
+    """Lyon moments (+ Thornton scores) in ONE ``mapInArrow`` pass: the
+    ``plan_features`` plan of the two Arrow-kernel families.  The
+    flagship query, ``FeatureFrame.fused_features`` and the benches call it;
+    the feature CLI and ``extract_features`` run the same planner.
 
-    Why this exists: composing ``with_lyon_features`` then
-    ``with_thornton_scores`` plans TWO consecutive PythonMapInArrow
-    operators, i.e. two full JVM→Python→JVM Arrow round-trips in which
-    the token arrays (~90% of the bytes) ride both crossings.  Arrow
-    transfer is memory-bandwidth-bound, so at high core counts the
-    duplicated crossing is contention, not just latency — fusing the
-    two kernels into one pass halves the Python-boundary traffic and
-    measurably improves N→4N scaling efficiency (BENCH/BASELINE.md).
+    One crossing instead of two: the token arrays (~90% of the bytes)
+    ride the JVM→Python boundary once, and with ``drop=("tokens",)``
+    the return crossing ships only the narrow feature columns.  Arrow
+    transfer is memory-bandwidth-bound, and fixed per-task Python cost
+    dominates small batches, so every extra crossing costs more than
+    its kernel work.
 
-    ``drop`` additionally removes columns from the OUTPUT batches at
-    the Python boundary (typically ``("tokens",)`` once the features
-    are computed) so the return crossing ships only the narrow feature
-    columns instead of echoing the token buffers back to the JVM.
-
-    Results are identical to the composed operators (pytest-pinned:
-    moments bit-exact, scores allclose at 1e-12 — the lstsq kernel is
-    batch-composition-dependent at ~1e-16).
+    Results are identical to the composed single-family operators
+    (pytest-pinned: moments bit-exact, scores allclose at 1e-12 — the
+    lstsq kernel is batch-composition-dependent at ~1e-16).
     """
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from pulsarfeatureextractor_spark.functions.moments import (
-        LYON_FIELDS,
-        moments_list_array,
-    )
-    from pulsarfeatureextractor_spark.functions.scores import (
-        SCORE_FIELDS,
-        scores_list_array,
-    )
-
-    dropset = set(drop)
-    keep = [f for f in df.schema.fields if f.name not in dropset]
-    feat_names = list(LYON_FIELDS) + (list(SCORE_FIELDS) if include_scores else [])
-    out_schema = T.StructType(
-        list(keep) + [T.StructField(n, T.DoubleType(), True) for n in feat_names]
-    )
-    keep_names = [f.name for f in keep]
-
-    def compute(batches):
-        for batch in batches:
-            tok = batch.column(tokens_col)
-            mats = [moments_list_array(tok)]
-            if include_scores:
-                mats.append(scores_list_array(tok))
-            arrays = [batch.column(n) for n in keep_names]
-            for mat in mats:
-                arrays.extend(
-                    pa.array(mat[:, i], type=pa.float64())
-                    for i in range(mat.shape[1])
-                )
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + feat_names)
-
-    return df.mapInArrow(compute, out_schema)
+    families = ("lyon", "thornton") if include_scores else ("lyon",)
+    return plan_features(df, families, tokens_col, drop)

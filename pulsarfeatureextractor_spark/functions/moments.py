@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pulsarfeatureextractor_spark.functions._arrow import map_arrow_kernels
+
 LYON_FIELDS = ["mean", "stdev", "skew", "kurt"]
 
 LYON_STRUCT = T.StructType(
@@ -328,23 +330,6 @@ def with_lyon_features(
     equality, BASELINE.json input_hint).  Embarrassingly parallel —
     no shuffle; the scan partitioning is the job partitioning.
     """
-    import pyarrow as pa
-
-    out_fields = list(df.schema.fields) + [
-        T.StructField(prefix + name, T.DoubleType(), True) for name in LYON_FIELDS
-    ]
-    out_schema = T.StructType(out_fields)
-    tok_col = tokens_col
-    names = [prefix + name for name in LYON_FIELDS]
-
-    def compute(batches):
-        for batch in batches:
-            moments = moments_list_array(batch.column(tok_col))
-            arrays = batch.columns + [
-                pa.array(moments[:, i], type=pa.float64()) for i in range(4)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=batch.schema.names + names
-            )
-
-    return df.mapInArrow(compute, out_schema)
+    return map_arrow_kernels(
+        df, [(tokens_col, [prefix + n for n in LYON_FIELDS], moments_list_array)]
+    )

@@ -27,10 +27,13 @@ partitioning is the job partitioning, identical to the Lyon moments.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from pulsarfeatureextractor_spark.functions._arrow import map_arrow_kernels
 
 SCORE_FIELDS = [
     "sin_chi2",      # chi2/n of best-fit sine (fundamental) to the normalized profile
@@ -191,26 +194,9 @@ def with_thornton_scores(
     df: DataFrame, tokens_col: str = "tokens", prefix: str = ""
 ) -> DataFrame:
     """Append the Thornton-style score columns (mapInArrow, zero-object)."""
-    import pyarrow as pa
-
-    out_fields = list(df.schema.fields) + [
-        T.StructField(prefix + name, T.DoubleType(), True) for name in SCORE_FIELDS
-    ]
-    out_schema = T.StructType(out_fields)
-    names = [prefix + name for name in SCORE_FIELDS]
-
-    def compute(batches):
-        for batch in batches:
-            scores = scores_list_array(batch.column(tokens_col))
-            arrays = batch.columns + [
-                pa.array(scores[:, i], type=pa.float64())
-                for i in range(len(SCORE_FIELDS))
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=batch.schema.names + names
-            )
-
-    return df.mapInArrow(compute, out_schema)
+    return map_arrow_kernels(
+        df, [(tokens_col, [prefix + n for n in SCORE_FIELDS], scores_list_array)]
+    )
 
 
 SUBBAND_FIELDS = [
@@ -338,32 +324,10 @@ def with_subband_scores(
     additionally removes columns (typically the wide cube itself) from
     the OUTPUT batches at the Python boundary, so the return crossing
     ships only the narrow score columns — same discipline as
-    ``featureset.fused_features_arrow``.
+    ``featureset.plan_features``.
     """
-    import pyarrow as pa
-
-    dropset = set(drop)
-    keep = [f for f in df.schema.fields if f.name not in dropset]
-    keep_names = [f.name for f in keep]
-    out_schema = T.StructType(
-        list(keep) + [
-            T.StructField(name, T.DoubleType(), True)
-            for name in SUBBAND_FIELDS
-        ]
-    )
-
-    def compute(batches):
-        for batch in batches:
-            scores = subband_scores_list_array(batch.column(flat_col), n_chan)
-            arrays = [batch.column(n) for n in keep_names] + [
-                pa.array(scores[:, i], type=pa.float64())
-                for i in range(len(SUBBAND_FIELDS))
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=keep_names + SUBBAND_FIELDS
-            )
-
-    return df.mapInArrow(compute, out_schema)
+    kernel = partial(subband_scores_list_array, n_chan=n_chan)
+    return map_arrow_kernels(df, [(flat_col, SUBBAND_FIELDS, kernel)], drop)
 
 
 def with_width_features(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:

@@ -34,6 +34,8 @@ hot keys), ``"broadcast"`` (small right side aggregated to per-entity
 sorted arrays and broadcast — ZERO shuffle of the big side), and the
 storage plan ``asof_bucketed_storage`` (Exchange-free over a
 pre-bucketed table — the 100 TB feature-store posture).
+``asof_self_join`` is the window plan for a right side that is a
+projection of the left: one read of the input feeds both sides.
 
 The reference has no joins at all (single-file for-loop; SURVEY.md
 §2A); this operator is the recast's new semantics mandated by
@@ -47,7 +49,7 @@ from contextlib import contextmanager
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -144,6 +146,58 @@ def asof_join(
         return _asof_broadcast(left, right, on, r_on, by_cols, direction,
                                tolerance, value_cols)
     raise ValueError(f"unknown strategy: {strategy}")
+
+
+def asof_self_join(
+    df: DataFrame,
+    on: str,
+    by: "str | Iterable[str]",
+    right_on: Column,
+    values: "dict[str, Column]",
+    direction: str = "backward",
+    tolerance: "float | None" = None,
+) -> DataFrame:
+    """As-of join of ``df`` onto itself, the right side being the
+    projection ``(by, right_on, values)`` of ``df``'s own rows.
+
+    Equal to ``asof_join(df, df.select(by, right_on.alias(r),
+    *[c.alias(n) for n, c in values.items()]), on, by, right_on=r,
+    value_cols=list(values), strategy="window")``, but each input row
+    is read once: one ``explode`` emits it as the left row and (unless
+    its key or right timestamp is NULL, which can never match) as the
+    right row of the tagged union, so everything upstream of ``df`` —
+    scan, Python crossings — runs once instead of once per side.
+    """
+    by_cols = _normalize_cols(by)
+    if direction not in ("backward", "forward"):
+        raise ValueError(f"unknown direction: {direction}")
+    axis_type = df.schema[on].dataType
+    value_cols = list(values)
+    value_types = df.select(*[c.alias(n) for n, c in values.items()]).schema
+    r_ts = right_on.cast(axis_type)
+
+    left_row = F.struct(
+        *[F.col(c) for c in df.columns],
+        F.lit(1).alias(_SIDE),
+        F.lit(None).cast(axis_type).alias(_RTS),
+        *[F.lit(None).cast(value_types[n].dataType).alias(n) for n in value_cols],
+    )
+    right_row = F.struct(
+        *[F.col(c) if c in by_cols
+          else r_ts.alias(c) if c == on
+          else F.lit(None).cast(df.schema[c].dataType).alias(c)
+          for c in df.columns],
+        F.lit(0).alias(_SIDE),
+        r_ts.alias(_RTS),
+        *[values[n].alias(n) for n in value_cols],
+    )
+    matchable = r_ts.isNotNull()
+    for c in by_cols:
+        matchable = matchable & F.col(c).isNotNull()
+    rows = F.when(matchable, F.array(left_row, right_row)).otherwise(F.array(left_row))
+    unioned = df.select(F.explode(rows).alias("__asof_row")).select("__asof_row.*")
+    return _asof_window_apply(unioned, on, by_cols, direction, tolerance,
+                              value_cols, out_cols=df.columns)
 
 
 def choose_asof_strategy(

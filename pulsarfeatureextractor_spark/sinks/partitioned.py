@@ -11,14 +11,17 @@ Design:
   batch commit — a crash can lose at most the in-flight batch, never
   corrupt the file);
 - the partition diff is relational, not driver-side set math at scale:
-  ``resume_plan`` = planned partitions LEFT ANTI JOIN completed
-  partitions (SURVEY.md §2B J4);
+  every write filters the completed keys out of the data by the
+  canonical key expression, and ``resume_plan`` gives the same diff of
+  a planned-partitions frame as a LEFT ANTI JOIN (SURVEY.md §2B J4);
 - each batch of partitions is one atomic Spark parquet job writing
   under ``out_dir`` with dynamic partition overwrite, so a partition
   dir is either fully committed by the parquet protocol or invisible;
-- per-partition row counts come from ``df.observe`` accumulators — no
-  second scan — and are written into the partition's lineage sidecar
-  together with the input snapshot id / spec / file manifest.
+- the row count and the set of partition keys each write committed
+  come from ``df.observe`` accumulators — no second scan — so an
+  unbatched run is a single Spark execution; they are written into the
+  partition's lineage sidecar together with the input snapshot id /
+  spec / file manifest.
 
 The reference has no notion of resume (a killed run restarts its
 directory walk from scratch; SURVEY.md §3.1) — this is new semantics
@@ -29,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from typing import Sequence
 
@@ -119,39 +123,44 @@ def run_partitioned_job(
 
     Returns ``{"written": [keys...], "skipped": [keys...]}``.
 
-    - ``batch_size=0``: all missing partitions in ONE Spark job
+    - ``batch_size=0``: all missing partitions in ONE Spark job, which
+      is the job's only SQL execution: the write filters out the
+      checkpoint's done keys and observes the row count and the set of
+      keys it wrote, and exactly those keys are recorded as done
       (fastest; resume granularity = whole run).
-    - ``batch_size=k``: k partitions per atomic job, checkpoint updated
-      after each — a kill between batches loses only the in-flight
-      batch and the rerun re-emits exactly the missing partitions.
+    - ``batch_size=k``: the distinct partition keys not yet done are
+      collected first (one more execution of ``df``), then written k
+      partitions per atomic job, checkpoint updated after each — a kill
+      between batches loses only the in-flight batch and the rerun
+      re-emits exactly the missing partitions.
     - ``fail_after_batches`` (tests only): simulate a mid-run kill.
 
     Scale note: the distinct-partition-keys collect is one tiny
-    aggregate (#partitions rows, not #rows); the data path stays fully
-    distributed and each batch job is a plain partitioned parquet write
-    with AQE sizing.
+    aggregate (#partitions rows, not #rows), and the observed key set is
+    #partitions strings; the data path stays fully distributed and each
+    batch job is a plain partitioned parquet write with AQE sizing.
     """
     checkpoint_path = checkpoint_path or os.path.join(out_dir, "_checkpoint.json")
     part_cols = list(partition_cols)
     lineage = lineage or {}
-
-    planned = df.select(*part_cols).distinct()
-    todo_df = resume_plan(planned, checkpoint_path, part_cols)
-    # collect the SAME Spark-computed __key the batch filter uses — a
-    # driver-side str() of raw values would disagree on NULLs ('None')
-    # and booleans ('True'), silently dropping those partitions while
-    # marking them done (data loss on every rerun).
-    todo = sorted(
-        r["__key"]
-        for r in todo_df.select(
-            _partition_key_expr(part_cols).alias("__key")
-        ).collect()
-    )
     ckpt = load_checkpoint(checkpoint_path)
     skipped = sorted(ckpt["done"].keys())
 
-    if not todo:
-        return {"written": [], "skipped": skipped}
+    # every key below is the SAME Spark-computed __key — a Python-side
+    # str() of raw values would disagree on NULLs ('None') and booleans
+    # ('True'), silently dropping those partitions while marking them
+    # done (data loss on every rerun).
+    keyed = df.withColumn("__key", _partition_key_expr(part_cols))
+    if ckpt["done"]:
+        keyed = keyed.where(~F.col("__key").isin(list(ckpt["done"])))
+    batches: "list[list[str] | None]"
+    if batch_size <= 0:
+        batches = [None]  # every key not done yet, as the write finds them
+    else:
+        todo = sorted(r["__key"] for r in keyed.select("__key").distinct().collect())
+        if not todo:
+            return {"written": [], "skipped": skipped}
+        batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
 
     spark = df.sparkSession
     # dynamic overwrite: only the partitions present in the batch are
@@ -161,30 +170,27 @@ def run_partitioned_job(
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    batches: list[list[str]]
-    if batch_size <= 0:
-        batches = [todo]
-    else:
-        batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
-
-    key_expr = _partition_key_expr(part_cols)
+    created_out_dir = not os.path.exists(out_dir)
     written: list[str] = []
     try:
         for bi, batch in enumerate(batches):
             if fail_after_batches and bi >= fail_after_batches:
                 raise RuntimeError(f"simulated kill before batch {bi}")
             obs = Observation(f"batch-{bi}")
-            batch_df = df.withColumn("__key", key_expr).where(
-                F.col("__key").isin(batch)
-            )
+            batch_df = keyed if batch is None else keyed.where(F.col("__key").isin(batch))
             observed = batch_df.observe(
-                obs, F.count(F.lit(1)).alias("rows")
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.collect_set("__key").alias("keys"),
             ).drop("__key")
             (observed.write.mode("overwrite")
              .partitionBy(*part_cols).parquet(out_dir))
-            metrics = dict(obs.get)
-            metrics["partitions"] = len(batch)
-            for key in batch:
+            got = obs.get
+            keys = sorted(got["keys"])
+            if not keys:
+                continue
+            metrics = {"rows": got["rows"], "partitions": len(keys)}
+            for key in keys:
                 sidecar = {
                     "partition": key,
                     "partition_spec": part_cols,
@@ -199,11 +205,15 @@ def run_partitioned_job(
                         json.dump(sidecar, f, default=str)
                 ckpt["done"][key] = sidecar
             _save_checkpoint(checkpoint_path, ckpt)
-            written.extend(batch)
+            written.extend(keys)
     finally:
         if prev_mode is None:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
+    if not written and created_out_dir:
+        # an empty write still creates the directory; the contract for
+        # "nothing to write" is no output at all
+        shutil.rmtree(out_dir, ignore_errors=True)
     return {"written": written, "skipped": skipped}

@@ -180,3 +180,57 @@ def test_broadcast_plan_shape(spark, tmp_path):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("Sort [") == 0, plan
+
+
+@pytest.mark.parametrize("direction,tolerance", [
+    ("backward", None), ("forward", None), ("backward", 900.0), ("forward", 900.0),
+])
+def test_self_join_equals_derived_right_side(spark, direction, tolerance):
+    """``asof_self_join`` (one read, exploded tagged union) equals
+    ``asof_join`` against the snapshot side derived from the same frame,
+    including rows with a NULL key, a NULL event time or a NULL
+    observation lag (right timestamp)."""
+    from pyspark.sql import functions as F
+
+    from pulsarfeatureextractor_spark.operators.asof import asof_self_join
+
+    rng = np.random.default_rng(5)
+    n = 300
+    ts = rng.integers(0, 20_000, n)
+    # distinct snapshot times (no tie between two snapshots of an entity),
+    # before or after their own row: some rows have no match either way
+    obs = rng.choice(20_000, size=n, replace=False)
+    pdf = pd.DataFrame({
+        "rid": np.arange(n),
+        "entity": [f"e{i}" for i in rng.integers(0, 12, n)],
+        "ts": EPOCH + pd.to_timedelta(ts, unit="s"),
+        "lag": ts - obs,
+        "v": rng.normal(size=n),
+    })
+    pdf["lag"] = pdf["lag"].astype("Int64")
+    pdf["entity"] = pdf["entity"].astype(object)
+    pdf.loc[[3, 40, 41], "entity"] = None
+    pdf.loc[[5, 60], "ts"] = pd.NaT
+    pdf.loc[[7, 80, 81], "lag"] = pd.NA
+    df = spark.createDataFrame(
+        pdf, "rid long, entity string, ts timestamp, lag long, v double")
+
+    obs = F.col("ts") - F.make_interval(secs=F.col("lag").cast("double"))
+    got = asof_self_join(
+        df, on="ts", by="entity", right_on=obs,
+        values={"rv": F.col("v"), "rlag": F.col("lag")},
+        direction=direction, tolerance=tolerance,
+    )
+    snaps = df.select("entity", obs.alias("obs_time"),
+                      F.col("v").alias("rv"), F.col("lag").alias("rlag"))
+    want = asof_join(df, snaps, on="ts", right_on="obs_time", by="entity",
+                     value_cols=["rv", "rlag"], direction=direction,
+                     tolerance=tolerance, strategy="window")
+    assert got.columns == want.columns == [*df.columns, "rv", "rlag"]
+    assert got.schema == want.schema
+    g, w = sorted(got.collect()), sorted(want.collect())
+    assert g == w
+    # the NULL rows are present and matched nothing
+    assert all(r["rv"] is None for r in g if r["entity"] is None or r["ts"] is None)
+    matched = sum(r["rv"] is not None for r in g)
+    assert n // 4 < matched < n

@@ -53,6 +53,30 @@ def test_job_end_to_end(spark, table_dir, tmp_path):
     assert res2["written"] == []
 
 
+def test_job_single_execution_equals_batched(spark, table_dir, tmp_path):
+    """``--batch-size 0`` (one SQL execution, keys observed by the write)
+    and ``--batch-size 5`` (keys collected first, four atomic jobs) write
+    the same rows, columns and partitions."""
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import extract_features
+
+    outs = {}
+    for bs in (0, 5):
+        out = str(tmp_path / f"out{bs}")
+        res = extract_features.main([
+            "--input", table_dir, "--output", out,
+            "--asof", "2024-01-20T00:00:00", "--feature-set", "all",
+            "--batch-size", str(bs),
+        ])
+        assert res["skipped"] == []
+        outs[bs] = (sorted(res["written"]), spark.read.parquet(out))
+    (keys0, df0), (keys5, df5) = outs[0], outs[5]
+    assert keys0 == keys5 and len(keys0) > 5
+    assert df0.columns == df5.columns
+    assert sorted(map(tuple, df0.collect())) == sorted(map(tuple, df5.collect()))
+
+
 @pytest.mark.slow
 def test_job_via_spark_submit(table_dir, tmp_path):
     """The literal deployment path: spark-submit --py-files."""

@@ -120,3 +120,77 @@ def test_lineage_sidecars_written(spark, seq_df, tmp_path):
     assert side["partition_spec"] == ["source"]
     assert side["batch_metrics"]["rows"] == 400
     assert side["batch_metrics"]["partitions"] == 20
+
+
+def _tree_bytes(root):
+    out = {}
+    for dirpath, _dirs, names in os.walk(root):
+        for n in names:
+            p = os.path.join(dirpath, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_single_execution_rerun_over_complete_checkpoint(spark, seq_df, tmp_path):
+    """``batch_size=0`` writes through its own done-key filter: a rerun
+    over a complete checkpoint writes nothing and changes no byte."""
+    out = str(tmp_path / "out")
+    df = seq_df.withColumn("mean", F.lit(1.0))
+    res = run_partitioned_job(df, out, ["source"], batch_size=0)
+    assert len(res["written"]) == 20 and res["skipped"] == []
+    before = _tree_bytes(out)
+    res2 = run_partitioned_job(df, out, ["source"], batch_size=0)
+    assert res2["written"] == [] and res2["skipped"] == res["written"]
+    assert _tree_bytes(out) == before
+
+
+def test_single_execution_resumes_after_batched_kill(spark, seq_df, tmp_path):
+    """A ``batch_size=0`` rerun after a killed batched run writes exactly
+    the partitions the checkpoint lacks, with the same sidecar metrics a
+    batched write of those partitions records."""
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt.json")
+    df = seq_df.withColumn("mean", F.lit(1.0))
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_partitioned_job(df, out, ["source"], ckpt, batch_size=6,
+                            fail_after_batches=2)
+    done = set(load_checkpoint(ckpt)["done"])
+    res = run_partitioned_job(df, out, ["source"], ckpt, batch_size=0)
+    assert set(res["skipped"]) == done and len(res["written"]) == 8
+    assert set(res["written"]).isdisjoint(done)
+    metrics = load_checkpoint(ckpt)["done"][res["written"][0]]["batch_metrics"]
+    assert metrics == {
+        "rows": seq_df.where(F.col("source").isin(res["written"])).count(),
+        "partitions": 8,
+    }
+    assert spark.read.parquet(out).count() == 400
+
+
+def test_single_execution_null_and_bool_keys(spark, tmp_path):
+    """NULL and boolean partition values keep their hive spellings in the
+    checkpoint keys when the keys come from the write's observation."""
+    from pyspark.sql import Row
+
+    rows = [Row(part="a", flag=True, v=1), Row(part=None, flag=True, v=2),
+            Row(part="b", flag=None, v=3), Row(part=None, flag=False, v=4)]
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt.json")
+    res = run_partitioned_job(spark.createDataFrame(rows), out, ["part", "flag"],
+                              checkpoint_path=ckpt)
+    assert res["written"] == [
+        "__HIVE_DEFAULT_PARTITION__/false", "__HIVE_DEFAULT_PARTITION__/true",
+        "a/true", "b/__HIVE_DEFAULT_PARTITION__"]
+    assert sorted(load_checkpoint(ckpt)["done"]) == res["written"]
+    assert os.path.isfile(os.path.join(
+        out, "part=__HIVE_DEFAULT_PARTITION__", "flag=true", "_lineage.json"))
+    assert sorted(r["v"] for r in spark.read.parquet(out).collect()) == [1, 2, 3, 4]
+
+
+@pytest.mark.parametrize("batch_size", [0, 3])
+def test_empty_input_writes_nothing(spark, tmp_path, batch_size):
+    """Zero input rows on a first run: nothing written, no checkpoint,
+    and no output directory left behind."""
+    out = str(tmp_path / "out")
+    empty = spark.range(10).selectExpr("id", "'s' AS source").where("id < 0")
+    res = run_partitioned_job(empty, out, ["source"], batch_size=batch_size)
+    assert res == {"written": [], "skipped": []}
+    assert not os.path.exists(out)

@@ -233,3 +233,73 @@ def test_embedding_generation_plan_pure_map(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
+
+
+def _counts(plan: str) -> "tuple[int, int, int]":
+    import re
+
+    return (len(re.findall(r"\bFileScan\b|\bBatchScan\b", plan)),
+            plan.count("MapInArrow"),
+            len(re.findall(r"\bExchange\b", plan)))
+
+
+def _cli_pipeline(spark, tmp_path):
+    import argparse
+    import os
+    import sys
+
+    from pulsarfeatureextractor_spark.sinks.manifest import IcebergLikeTable
+    from pulsarfeatureextractor_spark.sources.tokenized import synthetic_sequences
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "jobs"))
+    import extract_features
+
+    table = str(tmp_path / "table")
+    IcebergLikeTable(table).write(synthetic_sequences(spark, 200, seed=13),
+                                  partition_by=["source"])
+    args = argparse.Namespace(
+        input=table, snapshot=None, asof="2024-01-20T00:00:00",
+        feature_set="all", scores=False, gap_seconds=1800.0,
+    )
+    return extract_features.build_pipeline(spark, args)[0]
+
+
+def test_feature_cli_all_one_scan_one_crossing_one_exchange(spark, tmp_path):
+    """``--feature-set all``: the scan, the Lyon + Thornton kernels and the
+    self as-of join run once — one Scan, one MapInArrow, one Exchange
+    (the as-of, lag and session windows share the doc_id shuffle)."""
+    plan = _plan(_cli_pipeline(spark, tmp_path))
+    assert _counts(plan) == (1, 1, 1)
+    # the token arrays are dropped at the Python boundary
+    assert "tokens" not in plan.split("MapInArrow")[0]
+
+
+def test_flagship_one_scan_one_crossing_one_exchange(spark):
+    import __spark_entry__ as e
+
+    plan = _plan(e._flagship(spark, SF))
+    assert _counts(plan) == (1, 1, 1)
+    assert "tokens" not in plan.split("MapInArrow")[0]
+
+
+def _execution_ids(spark) -> "set[int]":
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {int(execs.apply(i).executionId()) for i in range(execs.size())}
+
+
+def test_partitioned_sink_batch_size_zero_is_one_execution(spark, tmp_path):
+    """``batch_size=0`` finds the keys it writes by observing the write:
+    no upfront distinct-key collect, one SQL execution for the job."""
+    from pulsarfeatureextractor_spark.sinks.partitioned import run_partitioned_job
+
+    df = spark.range(100).selectExpr("id", "concat('s', id % 4) AS source")
+    before = _execution_ids(spark)
+    res = run_partitioned_job(df, str(tmp_path / "out"), ["source"])
+    assert len(_execution_ids(spark) - before) == 1
+    assert res["written"] == ["s0", "s1", "s2", "s3"]
+    # batches need the keys first: a second execution per job
+    before = _execution_ids(spark)
+    run_partitioned_job(df, str(tmp_path / "out2"), ["source"], batch_size=4)
+    assert len(_execution_ids(spark) - before) == 2
